@@ -1,7 +1,11 @@
-.PHONY: test oracle bench zip submit
+.PHONY: test tier1 oracle bench zip submit
 
 test:
 	python -m pytest tests/ -x -q
+
+# the ROADMAP tier-1 gate, verbatim
+tier1:
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 oracle:
 	python scripts/check_oracles.py /root/testdata/sf0.01

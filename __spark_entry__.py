@@ -1168,8 +1168,7 @@ def _ensure_cdc_table(spark: SparkSession, sf_dir: str) -> str:
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     root = f"/tmp/sparkh3_fixtures/cdc_{tag}"
-    cur = Path(root) / "metadata" / "current"
-    if cur.exists() and cur.read_text().strip() == "2":
+    if manifest.current_version(root) == 2:
         return root
     if Path(root).exists():
         shutil.rmtree(root)

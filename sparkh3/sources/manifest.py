@@ -4,9 +4,10 @@ No Iceberg jar ships in this runtime, so we emulate the pieces the
 engine needs — atomic snapshot commits, per-file statistics, and
 planning-time file pruning — with a JSON metadata layer:
 
-    <root>/metadata/v<N>.json   snapshot: files + per-file h3 min/max
-    <root>/metadata/current     atomic pointer to the live snapshot
-    <root>/data/h3_bucket=<b>/  Parquet, rows sorted by h3 int64
+    <root>/metadata/v<N>.json       snapshot N: files + per-file h3
+                                    min/max; the live one is the highest N
+    <root>/gen-<id>/_h3_bucket=<b>/ one generation per commit: Parquet,
+                                    rows sorted by h3 int64
 
 Layout decisions that carry to 100 TB:
 * H3 stored as int64; files CLUSTERED by (bucket, h3) so int64 prefix
@@ -17,6 +18,20 @@ Layout decisions that carry to 100 TB:
   misses every queried cell's descendant range — the scan list shrinks
   before Spark ever plans, exactly like Iceberg manifest pruning.
 
+Commits: every write, merge, delete and compaction writes its rows into
+a new top-level generation directory named uniquely for that writer,
+fsyncs it, and claims ``v<parent+1>.json`` by hard-linking a fully
+written, fsynced temp file to that name. The link is an exclusive
+create, so of two writers planned against the same parent exactly one
+wins; the other raises ``RuntimeError`` and removes its generation. A
+crash leaves either no new version or a complete one, plus at most an
+unreferenced generation. Files a snapshot no longer names — including
+every generation an overwrite replaced — stay on disk, so older
+versions remain readable, until ``expire_snapshots`` reclaims them.
+Running maintenance (compaction, expiry) while a writer is active is
+unsupported: expiry removes any generation no kept snapshot names,
+including one a writer has not committed yet.
+
 A real Iceberg catalog can replace this by mapping write_table ->
 append/commit and read_table -> table scan with a cell-range predicate.
 """
@@ -25,8 +40,12 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import time
+import uuid
 from pathlib import Path
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -168,7 +187,6 @@ def write_table(
     mode: str = "overwrite",
     key_is_int: bool = False,
     bucket_bits: int = BUCKET_BITS,
-    data_subdir: str = "data",
     properties: dict | None = None,
 ) -> dict:
     """Write a cell-keyed table with snapshot manifest. `h3_col` is a
@@ -177,85 +195,133 @@ def write_table(
     top bits (the spatial prefix in both the S2 and any
     Hilbert/Z-ordered layout). Rows are clustered by key either way.
     ``bucket_bits`` sets the partition-column width (file count scales
-    with 2^bits — compaction rewrites with fewer bits); ``data_subdir``
-    lets maintenance write a NEW data generation next to the one it is
-    reading (a snapshot commit must never overwrite its own input)."""
+    with 2^bits — compaction rewrites with fewer bits).
+
+    Every call lands in its own generation directory and commits a new
+    snapshot. An append carries the live snapshot's files by reference
+    and adopts exactly the files it wrote, so a replayed batch after a
+    crash can never pick up an earlier attempt's orphans (exactly-once
+    for foreachBatch sinks). An overwrite names only the new files; the
+    old generations stay readable by version until
+    ``expire_snapshots``."""
     root_p = Path(root)
     (root_p / "metadata").mkdir(parents=True, exist_ok=True)
-    cur_file = root_p / "metadata" / "current"
-    is_append = mode != "overwrite" and cur_file.exists()
-    prev_snap = load_snapshot(root) if is_append else None
-    prev = int(cur_file.read_text()) if cur_file.exists() else 0
-    version = prev + 1
-    if is_append and data_subdir != "data":
-        # a custom generation dir on APPEND must not collide with files
-        # prior snapshots still reference: the parquet write below uses
-        # overwrite semantics, so replacing a referenced directory would
-        # silently break time travel for every older snapshot (ADVICE
-        # r5). The auto data_a<N> rename only protects the default path.
-        prefix = f"{data_subdir}/"
-        referenced = [
-            f["path"]
-            for f in (prev_snap["files"] if prev_snap else [])
-            if f["path"].startswith(prefix)
-        ]
-        if referenced:
-            raise ValueError(
-                f"write_table(mode='append', data_subdir={data_subdir!r}):"
-                f" {len(referenced)} file(s) of the current snapshot live"
-                " under that directory and an append would overwrite them"
-                " — use a fresh generation directory"
-            )
-    if is_append and data_subdir == "data":
-        # each append lands in its OWN generation directory, written
-        # with overwrite semantics: the snapshot adopts exactly what
-        # this call wrote (old files carry by reference, no re-stat),
-        # and a crash between the parquet write and the `current`
-        # advance leaves an UNREFERENCED dir that the replayed batch
-        # simply overwrites — orphaned rows can never be adopted into
-        # a later commit (exactly-once for foreachBatch sinks)
-        data_subdir = f"data_a{version}"
-    data_dir = root_p / data_subdir
+    parent = current_version(root)
+    prev_snap = (
+        load_snapshot(root, parent)
+        if mode != "overwrite" and parent is not None
+        else None
+    )
     out = _with_key_cols(df, h3_col, key_is_int, bucket_bits)
     schema_json = _evolve_schema(prev_snap, out.schema)
-    # cluster: partition by bucket, sort within partitions by cell int
-    out = out.repartition("_h3_bucket").sortWithinPartitions("_h3_int")
-    out.write.partitionBy("_h3_bucket").mode("overwrite").parquet(
-        str(data_dir)
+    gen, files = _write_generation(root_p, out)
+    return _commit(
+        root_p,
+        parent,
+        gen,
+        {
+            "h3_col": h3_col,
+            "key_kind": "int" if key_is_int else "h3_str",
+            "bucket_bits": bucket_bits,
+            "files": (prev_snap["files"] if prev_snap else []) + files,
+            "properties": properties or {},
+            "schema": schema_json,
+        },
     )
 
-    files = _scan_file_stats(root_p, data_dir)
-    if is_append:
-        files = prev_snap["files"] + files
-        if int(cur_file.read_text()) != prev:
-            raise RuntimeError(
-                "concurrent commit detected: `current` moved while the "
-                "append was writing — retry against the new snapshot"
-            )
+
+def _write_generation(
+    root_p: Path, keyed: DataFrame
+) -> tuple[Path, list[dict]]:
+    """Write rows that carry the layout columns (``_with_key_cols``),
+    clustered by (bucket, key), into a new top-level generation
+    directory whose name is unique to this writer; return the directory
+    and its file entries. No snapshot names the directory until
+    ``_commit`` succeeds, so concurrent writers never touch each
+    other's files, and a crashed writer leaves only an orphan that
+    ``expire_snapshots`` reclaims whole."""
+    gen = root_p / f"gen-{uuid.uuid4().hex}"
+    keyed.repartition("_h3_bucket").sortWithinPartitions(
+        "_h3_int"
+    ).write.partitionBy("_h3_bucket").parquet(str(gen))
+    return gen, _scan_file_stats(root_p, gen)
+
+
+def _fsync(paths) -> None:
+    for p in paths:
+        fd = os.open(p, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
+
+
+def _commit(
+    root_p: Path, parent: int | None, gen: Path, snapshot: dict
+) -> dict:
+    """Commit `snapshot` — whose new files all live in generation `gen`
+    — as version ``parent + 1``, the only place a ``v<N>.json`` is
+    written. The generation and the root that names it are fsynced
+    first; the snapshot is written and fsynced under a temp name, then
+    hard-linked to ``v<parent+1>.json``. The link is an exclusive
+    create: when another writer already committed that version this
+    one loses, removes its generation and raises, so the live snapshot
+    only ever names files its own writer wrote or carried."""
+    version = (parent or 0) + 1
     snapshot = {
         "version": version,
-        "parent": prev or None,
+        "parent": parent,
         "ts": time.time(),
-        "h3_col": h3_col,
-        "key_kind": "int" if key_is_int else "h3_str",
-        "bucket_bits": bucket_bits,
-        "files": files,
-        "total_rows": sum(f["rows"] for f in files),
-        "properties": properties or {},
-        "schema": schema_json,
+        **snapshot,
+        "total_rows": sum(f["rows"] for f in snapshot["files"]),
     }
-    (root_p / "metadata" / f"v{version}.json").write_text(json.dumps(snapshot))
-    tmp = root_p / "metadata" / "current.tmp"
-    tmp.write_text(str(version))
-    os.replace(tmp, cur_file)  # atomic commit
+    _fsync([*gen.rglob("*"), gen, root_p])
+    meta = root_p / "metadata"
+    tmp = meta / f".v{version}.{gen.name}.tmp"
+    tmp.write_text(json.dumps(snapshot))
+    _fsync([tmp])
+    try:
+        os.link(tmp, meta / f"v{version}.json")
+    except FileExistsError:
+        shutil.rmtree(gen)
+        raise RuntimeError(
+            f"concurrent commit detected: another writer committed "
+            f"version {version} first — retry against the new snapshot"
+        ) from None
+    finally:
+        tmp.unlink()
+    _fsync([meta])
     return snapshot
 
 
+_SNAPSHOT_NAME = re.compile(r"v(\d+)\.json")
+
+
+def _versions(root_p: Path) -> list[int]:
+    """Committed snapshot versions, ascending: exactly the
+    ``metadata/v<digits>.json`` names (not codebooks, not temp files)."""
+    names = (
+        _SNAPSHOT_NAME.fullmatch(p.name)
+        for p in (root_p / "metadata").glob("v*.json")
+    )
+    return sorted(int(m.group(1)) for m in names if m)
+
+
+def current_version(root: str) -> int | None:
+    """The live snapshot's version — the highest committed one — or
+    None when `root` holds no table."""
+    versions = _versions(Path(root))
+    return versions[-1] if versions else None
+
+
 def load_snapshot(root: str, version: int | None = None) -> dict:
-    root_p = Path(root)
     if version is None:
-        version = int((root_p / "metadata" / "current").read_text())
-    return json.loads((root_p / "metadata" / f"v{version}.json").read_text())
+        version = current_version(root)
+        if version is None:
+            raise FileNotFoundError(f"no snapshots under {root}/metadata")
+    return json.loads(
+        (Path(root) / "metadata" / f"v{version}.json").read_text()
+    )
 
 
 def _cells_to_ranges(snap: dict, cells: list[str]) -> list[tuple[int, int]]:
@@ -288,56 +354,38 @@ def read_table(
     table. Either way the file list shrinks BEFORE Spark plans (Iceberg
     manifest-pruning shape) and an exact residual range filter pushes
     down to parquet row groups."""
-    snap = load_snapshot(root, version)
-    root_p = Path(root)
-    paths = [str(root_p / f["path"]) for f in snap["files"]]
     if cells and ranges:
         raise ValueError("pass cells= or ranges=, not both")
+    snap = load_snapshot(root, version)
     key_ranges = None
     if cells:
         key_ranges = _cells_to_ranges(snap, cells)
     elif ranges is not None:
         key_ranges = _signed_ranges(ranges)
-    if key_ranges is not None:
-        keep = []
-        for f in snap["files"]:
-            if f["h3_min"] is None:
-                keep.append(f)
-                continue
-            if any(
-                not (f["h3_max"] < lo or f["h3_min"] > hi)
-                for lo, hi in key_ranges
-            ):
-                keep.append(f)
-        paths = [str(root_p / f["path"]) for f in keep]
-        if not paths:
-            first = str(root_p / snap["files"][0]["path"])
-            if snap.get("schema"):
-                from pyspark.sql.types import StructType
-
-                return (
-                    spark.read.schema(StructType.fromJson(snap["schema"]))
-                    .parquet(first)
-                    .limit(0)
-                )
-            return spark.read.parquet(first).limit(0)
-    if snap.get("schema"):
-        from pyspark.sql.types import StructType
-
-        reader = spark.read.schema(StructType.fromJson(snap["schema"]))
-        df = reader.parquet(*paths)
-    else:
-        df = spark.read.parquet(*paths)
-    if key_ranges is not None:
+    df = _read_entries(spark, Path(root), snap, _prune(snap, key_ranges))
+    if key_ranges:
         # exact residual filter (file pruning keeps a superset); range
         # predicates on the int64 cell push down to parquet row groups
         conds = None
         for lo, hi in key_ranges:
             cond = (F.col("_h3_int") >= F.lit(lo)) & (F.col("_h3_int") <= F.lit(hi))
             conds = cond if conds is None else (conds | cond)
-        if conds is not None:
-            df = df.filter(conds)
+        df = df.filter(conds)
     return df
+
+
+def _prune(snap: dict, key_ranges) -> list[dict]:
+    """The snapshot's file entries whose [h3_min, h3_max] overlaps some
+    key range (files without stats always survive); every entry when
+    `key_ranges` is None."""
+    if key_ranges is None:
+        return snap["files"]
+    return [
+        f
+        for f in snap["files"]
+        if f["h3_min"] is None
+        or any(not (f["h3_max"] < lo or f["h3_min"] > hi) for lo, hi in key_ranges)
+    ]
 
 
 def pruned_file_count(
@@ -350,16 +398,7 @@ def pruned_file_count(
     key_ranges = (
         _cells_to_ranges(snap, cells) if cells else _signed_ranges(ranges)
     )
-    kept = sum(
-        1
-        for f in snap["files"]
-        if f["h3_min"] is None
-        or any(
-            not (f["h3_max"] < lo or f["h3_min"] > hi)
-            for lo, hi in key_ranges
-        )
-    )
-    return kept, len(snap["files"])
+    return len(_prune(snap, key_ranges)), len(snap["files"])
 
 
 def _bucket_of_path(path: str) -> int | None:
@@ -375,11 +414,11 @@ def _read_entries(
 ) -> DataFrame:
     """Read a subset of a snapshot's file entries WITH the snapshot's
     recorded (evolved) schema, so files written before a column was
-    added null-fill it — the same discipline as read_table. Reading a
+    added null-fill it — every table read goes through here. Reading a
     raw file subset instead would resolve whatever schema the sampled
     footers happen to carry, silently dropping (or crashing on)
-    evolved columns inside merge/delete/CDC rewrites. Empty subset ->
-    an empty frame with the full schema."""
+    evolved columns inside reads and merge/delete/CDC rewrites. Empty
+    subset -> an empty frame with the full schema."""
     schema = None
     if snap.get("schema"):
         from pyspark.sql.types import StructType
@@ -416,14 +455,15 @@ def merge_table(
     path is reused, no data moves), which is what bounds merge rewrite
     cost by the matched footprint instead of the table size at 100 TB.
 
-    The rewrite lands in a new generation directory (``data_m<N>``) so
-    readers of the old snapshot are never disturbed (time travel via
-    ``read_table(version=...)`` keeps working); the commit is the same
-    atomic tmp+rename, with an optimistic-concurrency check that the
-    `current` pointer still names the snapshot the merge planned
-    against. Null merge keys or null layout keys in `updates` are
-    rejected (they would land in the hive default partition and escape
-    every range read)."""
+    The rewrite lands in a new generation directory so readers of the
+    old snapshot are never disturbed (time travel via
+    ``read_table(version=...)`` keeps working), and commits as the
+    version after the snapshot the merge planned against: if another
+    writer committed that version first, the merge raises
+    ``RuntimeError`` and leaves the table as that writer left it. Null
+    merge keys or null layout keys in `updates` are rejected (they
+    would land in the hive default partition and escape every range
+    read)."""
     snap = load_snapshot(root)
     root_p = Path(root)
     key_is_int = snap.get("key_kind") == "int"
@@ -472,18 +512,7 @@ def merge_table(
         .distinct()
         .collect()
     )
-    hit_rel = set()
-    for r in hit:
-        # input_file_name() returns a percent-encoded URI (ADVICE r5):
-        # decode it before resolving, or a table root with spaces/
-        # encoded characters crashes relative_to() instead of matching
-        from urllib.parse import unquote, urlparse
-
-        parsed = urlparse(r["_f"])
-        p = unquote(parsed.path) if parsed.scheme else r["_f"]
-        hit_rel.add(str(Path(p).resolve().relative_to(root_p.resolve())))
-    affected = [f for f in snap["files"] if f["path"] in hit_rel]
-    carried = [f for f in snap["files"] if f["path"] not in hit_rel]
+    affected, carried = _touched(root_p, snap, (r["_f"] for r in hit))
     pieces = up.select(*data_cols)
     if affected:
         old = _read_entries(spark, root_p, snap, affected)
@@ -491,63 +520,60 @@ def merge_table(
             up.select(merge_key).distinct(), merge_key, "anti"
         ).select(*data_cols)
         pieces = pieces.unionByName(keep_old)
-    return _commit_cow(
-        spark, snap, root_p, pieces, carried, len(affected),
-        {"merged_into": snap["version"]},
+    return _rewrite(
+        root_p, snap, pieces, carried, bits,
+        rewritten_files=len(affected), merged_into=snap["version"],
     )
 
 
-def _commit_cow(
-    spark: SparkSession,
-    snap: dict,
+def _touched(
+    root_p: Path, snap: dict, uris
+) -> tuple[list[dict], list[dict]]:
+    """Split `snap`'s file entries into those named by the
+    ``input_file_name()`` URIs and the rest. Spark percent-encodes the
+    URIs; they are decoded before matching, or a table root with spaces
+    or escaped characters would never match its manifest paths."""
+    hit = set()
+    for uri in uris:
+        parsed = urlparse(uri)
+        p = unquote(parsed.path) if parsed.scheme else uri
+        hit.add(str(Path(p).resolve().relative_to(root_p.resolve())))
+    return (
+        [f for f in snap["files"] if f["path"] in hit],
+        [f for f in snap["files"] if f["path"] not in hit],
+    )
+
+
+def _rewrite(
     root_p: Path,
-    pieces: DataFrame,
+    snap: dict,
+    rows: DataFrame,
     carried: list[dict],
-    n_rewritten: int,
-    extra: dict,
+    bits: int,
+    **fields,
 ) -> dict:
-    """Write `pieces` as the rewritten generation, carry `carried` file
-    entries by reference, and atomically advance `current` — with an
-    optimistic-concurrency check that no other writer committed since
-    `snap` was loaded (the planned parent)."""
+    """Commit, as the version after `snap`, the data-column `rows`
+    clustered into a new generation with `bits` bucket bits plus the
+    `carried` entries of `snap` by reference; `fields` are recorded in
+    the snapshot (e.g. ``merged_into``)."""
     key_is_int = snap.get("key_kind") == "int"
-    bits = snap["bucket_bits"]
-    h3_col = snap["h3_col"]
-    version = snap["version"] + 1
-    data_dir = root_p / f"data_m{version}"
-    out = _with_key_cols(pieces, h3_col, key_is_int, bits)
-    out = out.repartition("_h3_bucket").sortWithinPartitions("_h3_int")
-    out.write.partitionBy("_h3_bucket").mode("overwrite").parquet(
-        str(data_dir)
+    gen, new_files = _write_generation(
+        root_p, _with_key_cols(rows, snap["h3_col"], key_is_int, bits)
     )
-    new_files = _scan_file_stats(root_p, data_dir)
-    cur_file = root_p / "metadata" / "current"
-    if int(cur_file.read_text()) != snap["version"]:
-        raise RuntimeError(
-            "concurrent commit detected: `current` moved while the "
-            "rewrite was planning — retry against the new snapshot"
-        )
-    snapshot = {
-        "version": version,
-        "parent": snap["version"],
-        "ts": time.time(),
-        "h3_col": h3_col,
-        "key_kind": snap.get("key_kind", "h3_str"),
-        "bucket_bits": bits,
-        "files": carried + new_files,
-        "total_rows": sum(f["rows"] for f in carried + new_files),
-        "rewritten_files": n_rewritten,
-        "carried_files": len(carried),
-        **({"schema": snap["schema"]} if "schema" in snap else {}),
-        **extra,
-    }
-    (root_p / "metadata" / f"v{version}.json").write_text(
-        json.dumps(snapshot)
+    return _commit(
+        root_p,
+        snap["version"],
+        gen,
+        {
+            "h3_col": snap["h3_col"],
+            "key_kind": snap.get("key_kind", "h3_str"),
+            "bucket_bits": bits,
+            "files": carried + new_files,
+            "carried_files": len(carried),
+            **({"schema": snap["schema"]} if "schema" in snap else {}),
+            **fields,
+        },
     )
-    tmp = root_p / "metadata" / "current.tmp"
-    tmp.write_text(str(version))
-    os.replace(tmp, cur_file)
-    return snapshot
 
 
 def delete_table(
@@ -565,8 +591,8 @@ def delete_table(
     evaluates NULL on a row does not delete it.
 
     Old snapshots stay readable (``read_table(version=...)`` time
-    travel); the commit is the same atomic tmp+rename with the
-    optimistic-concurrency parent check as ``merge_table``."""
+    travel); the rewrite commits like ``merge_table``'s, raising
+    ``RuntimeError`` if another writer committed first."""
     snap = load_snapshot(root)
     root_p = Path(root)
     if not snap["files"]:
@@ -579,17 +605,9 @@ def delete_table(
         .count()
         .collect()
     )
-    # normalize to the manifest's relative-path form
-    hit_rel, n_deleted = set(), 0
-    for r in hit:
-        p = r["_f"]
-        p = p[len("file:"):] if p.startswith("file:") else p
-        hit_rel.add(str(Path(p).resolve().relative_to(root_p.resolve())))
-        n_deleted += r["count"]
-    if not hit_rel:
+    affected, carried = _touched(root_p, snap, (r["_f"] for r in hit))
+    if not affected:
         return snap  # no matching rows: the snapshot is unchanged
-    affected = [f for f in snap["files"] if f["path"] in hit_rel]
-    carried = [f for f in snap["files"] if f["path"] not in hit_rel]
     data_cols_df = _read_entries(spark, root_p, snap, affected)
     data_cols = [
         c for c in data_cols_df.columns if c not in ("_h3_int", "_h3_bucket")
@@ -598,9 +616,11 @@ def delete_table(
     pieces = data_cols_df.filter(~F.coalesce(pred, F.lit(False))).select(
         *data_cols
     )
-    return _commit_cow(
-        spark, snap, root_p, pieces, carried, len(affected),
-        {"deleted_from": snap["version"], "deleted_rows": int(n_deleted)},
+    return _rewrite(
+        root_p, snap, pieces, carried, snap["bucket_bits"],
+        rewritten_files=len(affected),
+        deleted_from=snap["version"],
+        deleted_rows=sum(r["count"] for r in hit),
     )
 
 
@@ -750,14 +770,16 @@ def compact_table(
 ) -> dict:
     """Table maintenance: rewrite the CURRENT snapshot's rows into
     fewer, larger files (Iceberg rewrite_data_files semantics) and
-    commit the result as a new snapshot.
+    commit the result as a new snapshot that records
+    ``compacted_from``.
 
     The bucket width shrinks to roughly total_bytes / target files
-    (file count tracks 2^bits), the rewrite lands in a NEW data
-    generation directory (`data_v<N>`) so readers of the old snapshot
-    are never disturbed, and clustering/pruning behavior is preserved —
-    only the file granularity changes. Old generations are reclaimed by
-    `expire_snapshots`."""
+    (file count tracks 2^bits), the rewrite lands in a new generation
+    directory so readers of the old snapshot are never disturbed, and
+    clustering/pruning behavior is preserved — only the file
+    granularity changes. Old generations are reclaimed by
+    `expire_snapshots`. Like all maintenance, run it only while no
+    writer is active."""
     import math
 
     snap = load_snapshot(root)
@@ -772,37 +794,27 @@ def compact_table(
             math.ceil(math.log2(max(1.0, total_bytes / target_file_bytes))),
         ),
     )
-    df = read_table(spark, root).drop("_h3_int", "_h3_bucket")
-    new = write_table(
-        df,
-        root,
-        snap["h3_col"],
-        key_is_int=snap.get("key_kind") == "int",
-        bucket_bits=bits,
-        data_subdir=f"data_v{snap['version'] + 1}",
+    rows = _read_entries(spark, root_p, snap, snap["files"]).drop(
+        "_h3_int", "_h3_bucket"
     )
-    new["compacted_from"] = snap["version"]
-    # same tmp+rename discipline as the original commit — `current`
-    # already points at this version, so an in-place rewrite could leave
-    # the live snapshot truncated on a crash
-    target = root_p / "metadata" / f"v{new['version']}.json"
-    tmp = root_p / "metadata" / f"v{new['version']}.json.tmp"
-    tmp.write_text(json.dumps(new))
-    os.replace(tmp, target)
-    return new
+    return _rewrite(
+        root_p, snap, rows, [], bits,
+        rewritten_files=len(snap["files"]), compacted_from=snap["version"],
+    )
 
 
 def expire_snapshots(root: str, keep_last: int = 1) -> dict:
     """Table maintenance: drop all but the newest `keep_last` snapshots
     and delete every data file no kept snapshot references (Iceberg
-    expire_snapshots + orphan-file cleanup). Returns counts."""
+    expire_snapshots + orphan-file cleanup), including generation
+    directories no snapshot ever committed. Returns counts. Run it only
+    while no writer is active: it removes a generation a writer has
+    written but not yet committed."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     root_p = Path(root)
     meta = root_p / "metadata"
-    versions = sorted(
-        int(p.stem[1:]) for p in meta.glob("v*.json")
-    )
+    versions = _versions(root_p)
     if not versions:
         # an empty keep-set would classify EVERY file as orphaned — a
         # typo'd root must never be vacuumed
@@ -816,8 +828,6 @@ def expire_snapshots(root: str, keep_last: int = 1) -> dict:
     # whole generation directories no kept snapshot touches go wholesale
     # (including Spark's _SUCCESS/.crc sidecars); referenced generations
     # get per-file orphan cleanup only
-    import shutil
-
     ref_tops = {Path(p).parts[0] for p in referenced}
     for d in list(root_p.iterdir()):
         if d.is_dir() and d.name != "metadata" and d.name not in ref_tops:

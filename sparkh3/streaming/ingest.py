@@ -103,12 +103,14 @@ def idempotent_append(
     table maintenance (compaction/expiry) only while the stream is
     stopped, since maintenance commits its own snapshot on top of the
     batch marker."""
-    from pathlib import Path
-
     from ..sources import manifest
 
-    if (Path(table_root) / "metadata" / "current").exists():
-        props = manifest.load_snapshot(table_root).get("properties") or {}
+    version = manifest.current_version(table_root)
+    if version is not None:
+        props = (
+            manifest.load_snapshot(table_root, version).get("properties")
+            or {}
+        )
         if (
             props.get("stream_id") == stream_id
             and props.get("batch_id") == batch_id

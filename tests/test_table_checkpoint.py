@@ -481,7 +481,14 @@ class TestMergeTable:
         """MERGE semantics + the copy-on-write guarantee: matched keys
         replaced, new keys inserted, and every untouched bucket's file
         carries over by reference (same path, no rewrite)."""
-        root = str(tmp_path / "merge")
+        self._upsert_bucket_cow(spark, h3_docs, str(tmp_path / "merge"))
+
+    def test_upsert_bucket_cow_root_with_space(self, spark, h3_docs, tmp_path):
+        """input_file_name() percent-encodes the space; the touched-file
+        lookup must decode it to match the manifest paths."""
+        self._upsert_bucket_cow(spark, h3_docs, str(tmp_path / "merge root"))
+
+    def _upsert_bucket_cow(self, spark, h3_docs, root):
         snap1 = manifest.write_table(h3_docs, root, "h3_07")
         two = h3_docs.orderBy("doc_id").limit(2).collect()
         upd = spark.createDataFrame(
@@ -548,7 +555,14 @@ class TestDeleteTable:
     def test_cow_delete(self, spark, h3_docs, tmp_path):
         """Predicate delete rewrites only files containing matches;
         NULL-predicate rows survive (SQL DELETE semantics)."""
-        root = str(tmp_path / "del")
+        self._cow_delete(spark, h3_docs, str(tmp_path / "del"))
+
+    def test_cow_delete_root_with_space(self, spark, h3_docs, tmp_path):
+        """input_file_name() percent-encodes the space; the touched-file
+        lookup must decode it to match the manifest paths."""
+        self._cow_delete(spark, h3_docs, str(tmp_path / "del root"))
+
+    def _cow_delete(self, spark, h3_docs, root):
         snap1 = manifest.write_table(h3_docs, root, "h3_07")
         victim = h3_docs.orderBy("doc_id").first()
         snap2 = manifest.delete_table(
@@ -781,9 +795,12 @@ class TestCowRegressions:
         snap1 = manifest.write_table(h3_docs, root, "h3_07")
         root_p = Path(root)
         # simulate the crash: copy a committed data file as a stray
-        # into BOTH the live generation and the next append's target
+        # into BOTH the live generation and an unreferenced one, as a
+        # writer killed before its commit leaves it
         src = root_p / snap1["files"][0]["path"]
-        for gen in ("data", "data_a2"):
+        live = Path(snap1["files"][0]["path"]).parts[0]
+        orphan = "gen-0123456789abcdef0123456789abcdef"
+        for gen in (live, orphan):
             dst = root_p / gen / "_h3_bucket=999" / "stray.parquet"
             dst.parent.mkdir(parents=True, exist_ok=True)
             shutil.copy(src, dst)
@@ -791,6 +808,12 @@ class TestCowRegressions:
         snap2 = manifest.write_table(extra, root, "h3_07", mode="append")
         assert snap2["total_rows"] == snap1["total_rows"] + 3
         assert manifest.read_table(spark, root).count() == snap2["total_rows"]
+        # the append adopted only its own generation's files
+        added = snap2["files"][len(snap1["files"]):]
+        assert snap2["files"][: len(snap1["files"])] == snap1["files"]
+        assert len({Path(f["path"]).parts[0] for f in added}) == 1
+        assert Path(added[0]["path"]).parts[0] not in (live, orphan)
+        assert not any("stray" in f["path"] for f in snap2["files"])
 
     def test_rollup_delta_unknown_kind_raises(self, spark):
         ch = spark.createDataFrame(
@@ -827,3 +850,239 @@ class TestCheckpointGuardrails:
             b, "m", ident, str(tmp_path), "doc_id", n_shards=1
         )
         assert sorted(r.text for r in out.collect()) == ["other", "other"]
+
+
+# A child process that appends `rows` to the table at `root` and is
+# SIGKILLed at one commit step; the kill points wrap the manifest's own
+# functions, so the production code has no hook for them.
+_KILL_CHILD = r"""
+import json, os, signal, sys
+from pyspark.sql import SparkSession
+from sparkh3.sources import manifest
+
+root, step, rows = sys.argv[1], sys.argv[2], json.loads(sys.argv[3])
+
+
+def die():
+    os.kill(os.getpid(), signal.SIGKILL)
+
+
+def then_die(fn):
+    def wrapped(*args):
+        fn(*args)
+        die()
+    return wrapped
+
+
+if step == "data_written":
+    manifest._write_generation = then_die(manifest._write_generation)
+elif step == "data_fsynced":  # the first fsync call covers the generation
+    manifest._fsync = then_die(manifest._fsync)
+elif step == "snapshot_written":  # temp snapshot written + fsynced
+    os.link = lambda *args: die()
+elif step == "linked":
+    os.link = then_die(os.link)
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.memory", "512m")
+    .config("spark.sql.shuffle.partitions", "2")
+    .getOrCreate()
+)
+df = spark.createDataFrame(
+    [tuple(r) for r in rows],
+    "doc_id string, lat double, lng double, h3_07 string",
+)
+manifest.write_table(df, root, "h3_07", mode="append")
+sys.exit(3)  # the kill point was never reached
+"""
+
+
+class TestCommitProtocol:
+    """Snapshot commits: one generation directory per writer, and an
+    exclusive-create claim of the next ``v<N>.json``."""
+
+    COLS = ["doc_id", "lat", "lng", "h3_07"]
+
+    def _ids(self, spark, root, version=None):
+        df = manifest.read_table(spark, root, version=version)
+        return sorted(r.doc_id for r in df.select("doc_id").collect())
+
+    def _tagged(self, h3_docs, tag, n):
+        return (
+            h3_docs.orderBy("doc_id")
+            .limit(n)
+            .withColumn("doc_id", F.concat(F.lit(f"{tag}-"), "doc_id"))
+            .select(*self.COLS)
+        )
+
+    def test_overwrite_keeps_old_version_readable(self, spark, h3_docs, tmp_path):
+        root = str(tmp_path / "ow")
+        snap1 = manifest.write_table(self._tagged(h3_docs, "old", 50), root, "h3_07")
+        ids1 = self._ids(spark, root)
+        snap2 = manifest.write_table(self._tagged(h3_docs, "new", 20), root, "h3_07")
+        assert snap2["version"] == 2 and snap2["parent"] == 1
+        assert snap2["total_rows"] == 20
+        assert self._ids(spark, root, version=1) == ids1
+        assert all(i.startswith("new-") for i in self._ids(spark, root))
+        # the overwritten generation lives until expire_snapshots
+        res = manifest.expire_snapshots(root, keep_last=1)
+        assert res["removed_files"] == len(snap1["files"])
+        assert self._ids(spark, root) == self._ids(spark, root, version=2)
+
+    def test_current_version_reads_snapshot_names_only(self, tmp_path):
+        assert manifest.current_version(str(tmp_path)) is None
+        with pytest.raises(FileNotFoundError):
+            manifest.load_snapshot(str(tmp_path))
+        meta = tmp_path / "metadata"
+        meta.mkdir()
+        for name in (
+            "v1.json", "v3.json", "ivf_codebook_v9.json",
+            "pq_codebook_v9.json", ".v7.gen-x.tmp", "v8.json.tmp",
+            "vx.json", "v2a.json",
+        ):
+            (meta / name).write_text("{}")
+        assert manifest.current_version(str(tmp_path)) == 3
+
+    def test_racing_appends_loser_raises(
+        self, spark, h3_docs, tmp_path, monkeypatch
+    ):
+        """The order that corrupted the table when both appends wrote
+        the same directory: A writes its generation, B writes its
+        generation, A commits, B commits. B must lose cleanly."""
+        import threading
+
+        root = str(tmp_path / "race")
+        base = manifest.write_table(self._tagged(h3_docs, "base", 30), root, "h3_07")
+        real = manifest._write_generation
+        gens = {}
+        a_written, b_written, a_done = (threading.Event() for _ in range(3))
+
+        def paused(root_p, keyed):
+            me = threading.current_thread().name
+            if me == "B":
+                assert a_written.wait(120)
+            gens[me] = real(root_p, keyed)
+            if me == "A":
+                a_written.set()
+                assert b_written.wait(120)
+            else:
+                b_written.set()
+                assert a_done.wait(120)
+            return gens[me]
+
+        monkeypatch.setattr(manifest, "_write_generation", paused)
+        results = {}
+
+        def append(rows):
+            me = threading.current_thread().name
+            try:
+                results[me] = manifest.write_table(rows, root, "h3_07", mode="append")
+            except Exception as e:  # reported through `results`
+                results[me] = e
+            finally:
+                if me == "A":
+                    a_done.set()
+
+        threads = [
+            threading.Thread(target=append, name=t, args=(self._tagged(h3_docs, t, 3),))
+            for t in ("A", "B")
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+        assert isinstance(results["A"], dict), results["A"]
+        assert results["A"]["version"] == 2
+        assert isinstance(results["B"], RuntimeError), results["B"]
+        assert "concurrent commit detected" in str(results["B"])
+        assert not gens["B"][0].exists()
+        assert manifest.current_version(root) == 2
+        ids = self._ids(spark, root)
+        assert len(ids) == base["total_rows"] + 3
+        assert sum(i.startswith("A-") for i in ids) == 3
+        assert not any(i.startswith("B-") for i in ids)
+
+    def test_concurrent_appends_keep_every_acknowledged_row(
+        self, spark, h3_docs, tmp_path
+    ):
+        """More appending threads than cores: every acknowledged append's
+        rows read back, no loser's do, and no loser leaves a generation."""
+        import sys
+        from concurrent.futures import ThreadPoolExecutor
+
+        root = str(tmp_path / "stress")
+        manifest.write_table(self._tagged(h3_docs, "base", 20), root, "h3_07")
+        expect = set(self._ids(spark, root))
+        batches = {f"w{i}": self._tagged(h3_docs, f"w{i}", 2) for i in range(6)}
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            with ThreadPoolExecutor(max_workers=len(batches)) as pool:
+                futs = {
+                    tag: pool.submit(
+                        manifest.write_table, rows, root, "h3_07", mode="append"
+                    )
+                    for tag, rows in batches.items()
+                }
+                won = []
+                for tag, fut in futs.items():
+                    try:
+                        fut.result(timeout=300)
+                        won.append(tag)
+                    except RuntimeError as e:
+                        assert "concurrent commit detected" in str(e)
+        finally:
+            sys.setswitchinterval(interval)
+        assert won
+        for tag in won:
+            expect |= {r.doc_id for r in batches[tag].collect()}
+        got = self._ids(spark, root)
+        assert len(got) == len(expect) == 20 + 2 * len(won)
+        assert set(got) == expect
+        snap = manifest.load_snapshot(root)
+        assert snap["version"] == 1 + len(won)
+        referenced = {Path(f["path"]).parts[0] for f in snap["files"]}
+        on_disk = {p.name for p in Path(root).iterdir() if p.name != "metadata"}
+        assert on_disk == referenced
+
+    @pytest.mark.parametrize(
+        "step, committed",
+        [
+            ("data_written", False),
+            ("data_fsynced", False),
+            ("snapshot_written", False),
+            ("linked", True),
+        ],
+    )
+    def test_kill_at_commit_step(self, spark, h3_docs, tmp_path, step, committed):
+        """SIGKILL a writer at each commit step: the table then reads
+        exactly the old snapshot or exactly the new one, and the next
+        append commits on top of it."""
+        import signal
+        import subprocess
+        import sys
+
+        root = str(tmp_path / "kill")
+        manifest.write_table(self._tagged(h3_docs, "base", 20), root, "h3_07")
+        old_ids = self._ids(spark, root)
+        rows = [list(r) for r in self._tagged(h3_docs, "kid", 4).collect()]
+        proc = subprocess.run(
+            [sys.executable, "-c", _KILL_CHILD, root, step, json.dumps(rows)],
+            cwd=Path(__file__).resolve().parents[1],
+            capture_output=True,
+            text=True,
+            timeout=300,
+        )
+        assert proc.returncode == -signal.SIGKILL, proc.stderr[-2000:]
+        new_ids = sorted(old_ids + [r[0] for r in rows])
+        assert manifest.current_version(root) == (2 if committed else 1)
+        assert self._ids(spark, root) == (new_ids if committed else old_ids)
+        snap = manifest.write_table(
+            self._tagged(h3_docs, "next", 2), root, "h3_07", mode="append"
+        )
+        assert snap["version"] == (3 if committed else 2)
+        assert len(self._ids(spark, root)) == len(
+            new_ids if committed else old_ids
+        ) + 2
