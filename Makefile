@@ -1,4 +1,4 @@
-.PHONY: test tier1 oracle bench zip submit
+.PHONY: test tier1 oracle bench perf zip submit
 
 test:
 	python -m pytest tests/ -x -q
@@ -12,6 +12,14 @@ oracle:
 
 bench:
 	python bench.py
+
+# one benchmark run, the command every timing comparison uses:
+#   make perf W=table_maintenance SEED=101 TRACE=0
+W ?= table_maintenance
+SEED ?= 1
+TRACE ?= 0
+perf:
+	python3 perfbench/run.py --workload $(W) --seed $(SEED) --seconds 6 --trace $(TRACE)
 
 zip:
 	python -m zipfile -c sparkh3.zip sparkh3

@@ -6,6 +6,9 @@ planning-time file pruning — with a JSON metadata layer:
 
     <root>/metadata/v<N>.json       snapshot N: files + per-file h3
                                     min/max; the live one is the highest N
+    <root>/metadata/files-<gen>/    snapshot N's file list as one flat
+                                    directory: entry i is a relative
+                                    symlink named 000000.. to files[i]
     <root>/gen-<id>/_h3_bucket=<b>/ one generation per commit: Parquet,
                                     rows sorted by h3 int64
 
@@ -17,20 +20,29 @@ Layout decisions that carry to 100 TB:
 * ``read_table(cells=...)`` prunes files whose [h3_min, h3_max] range
   misses every queried cell's descendant range — the scan list shrinks
   before Spark ever plans, exactly like Iceberg manifest pruning.
+* A whole-snapshot read hands Spark the snapshot's listing directory,
+  one path however many files it names: Spark lists it with one
+  in-process call, where a list of more than
+  ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) file
+  paths costs a distributed listing job with a task per file.
 
 Commits: every write, merge, delete and compaction writes its rows into
 a new top-level generation directory named uniquely for that writer,
-fsyncs it, and claims ``v<parent+1>.json`` by hard-linking a fully
-written, fsynced temp file to that name. The link is an exclusive
-create, so of two writers planned against the same parent exactly one
-wins; the other raises ``RuntimeError`` and removes its generation. A
-crash leaves either no new version or a complete one, plus at most an
-unreferenced generation. Files a snapshot no longer names — including
-every generation an overwrite replaced — stay on disk, so older
-versions remain readable, until ``expire_snapshots`` reclaims them.
-Running maintenance (compaction, expiry) while a writer is active is
-unsupported: expiry removes any generation no kept snapshot names,
-including one a writer has not committed yet.
+fsyncs it, writes the snapshot's listing directory, and claims
+``v<parent+1>.json`` by hard-linking a fully written, fsynced temp file
+to that name. The link is an exclusive create, so of two writers
+planned against the same parent exactly one wins; the other raises
+``RuntimeError`` and removes its generation and listing. A crash
+leaves either no new version or a complete one, plus at most an
+unreferenced generation, listing and temp file. Files a snapshot no
+longer names — including every generation an overwrite replaced —
+stay on disk, so older versions remain readable, until
+``expire_snapshots`` reclaims them. Running maintenance (compaction,
+expiry) while a writer is active is unsupported: expiry removes any
+generation, listing or temp file no kept snapshot names, including
+those of a writer that has not committed yet. The claim and the
+listing both assume a local POSIX filesystem (atomic ``link``,
+symlinks).
 
 A real Iceberg catalog can replace this by mapping write_table ->
 append/commit and read_table -> table scan with a cell-range predicate.
@@ -256,27 +268,46 @@ def _fsync(paths) -> None:
             os.close(fd)
 
 
+def _write_listing(listing: Path, files: list[dict]) -> None:
+    """Create `listing` as a flat directory holding, for each manifest
+    entry ``files[i]``, a relative symlink named ``i`` (six digits, no
+    ``.parquet`` suffix, so no orphan sweep ever matches it) to the
+    entry's data file; fsync it and ``metadata/``."""
+    listing.mkdir()
+    for i, f in enumerate(files):
+        # `listing` is <root>/metadata/files-<gen>: two levels down
+        os.symlink(Path("..", "..", f["path"]), listing / f"{i:06d}")
+    _fsync([listing, listing.parent])
+
+
 def _commit(
     root_p: Path, parent: int | None, gen: Path, snapshot: dict
 ) -> dict:
     """Commit `snapshot` — whose new files all live in generation `gen`
     — as version ``parent + 1``, the only place a ``v<N>.json`` is
     written. The generation and the root that names it are fsynced
-    first; the snapshot is written and fsynced under a temp name, then
-    hard-linked to ``v<parent+1>.json``. The link is an exclusive
-    create: when another writer already committed that version this
-    one loses, removes its generation and raises, so the live snapshot
-    only ever names files its own writer wrote or carried."""
+    first; then the snapshot's file list is written as the listing
+    directory ``metadata/files-<gen>/`` (recorded as ``"listing"``,
+    read by whole-snapshot reads); then the snapshot is written and
+    fsynced under a temp name and hard-linked to ``v<parent+1>.json``.
+    The link is an exclusive create: when another writer already
+    committed that version this one loses, removes its generation and
+    listing and raises, so the live snapshot only ever names files its
+    own writer wrote or carried. Like the link, the listing's symlinks
+    assume a local POSIX filesystem."""
     version = (parent or 0) + 1
+    meta = root_p / "metadata"
+    listing = meta / f"files-{gen.name}"
     snapshot = {
         "version": version,
         "parent": parent,
         "ts": time.time(),
         **snapshot,
         "total_rows": sum(f["rows"] for f in snapshot["files"]),
+        "listing": str(listing.relative_to(root_p)),
     }
     _fsync([*gen.rglob("*"), gen, root_p])
-    meta = root_p / "metadata"
+    _write_listing(listing, snapshot["files"])
     tmp = meta / f".v{version}.{gen.name}.tmp"
     tmp.write_text(json.dumps(snapshot))
     _fsync([tmp])
@@ -284,6 +315,7 @@ def _commit(
         os.link(tmp, meta / f"v{version}.json")
     except FileExistsError:
         shutil.rmtree(gen)
+        shutil.rmtree(listing)
         raise RuntimeError(
             f"concurrent commit detected: another writer committed "
             f"version {version} first — retry against the new snapshot"
@@ -353,7 +385,10 @@ def read_table(
     region covering, sign-split internally) — works for any int-keyed
     table. Either way the file list shrinks BEFORE Spark plans (Iceberg
     manifest-pruning shape) and an exact residual range filter pushes
-    down to parquet row groups."""
+    down to parquet row groups. Without either, the whole snapshot is
+    read through its listing directory: Spark gets one path and lists
+    it in-process, with no Spark job at any file count (snapshots
+    written before listings existed pass their file paths)."""
     if cells and ranges:
         raise ValueError("pass cells= or ranges=, not both")
     snap = load_snapshot(root, version)
@@ -362,7 +397,10 @@ def read_table(
         key_ranges = _cells_to_ranges(snap, cells)
     elif ranges is not None:
         key_ranges = _signed_ranges(ranges)
-    df = _read_entries(spark, Path(root), snap, _prune(snap, key_ranges))
+    df = _read_entries(
+        spark, Path(root), snap,
+        None if key_ranges is None else _prune(snap, key_ranges),
+    )
     if key_ranges:
         # exact residual filter (file pruning keeps a superset); range
         # predicates on the int64 cell push down to parquet row groups
@@ -376,10 +414,7 @@ def read_table(
 
 def _prune(snap: dict, key_ranges) -> list[dict]:
     """The snapshot's file entries whose [h3_min, h3_max] overlaps some
-    key range (files without stats always survive); every entry when
-    `key_ranges` is None."""
-    if key_ranges is None:
-        return snap["files"]
+    key range (files without stats always survive)."""
     return [
         f
         for f in snap["files"]
@@ -410,32 +445,36 @@ def _bucket_of_path(path: str) -> int | None:
 
 
 def _read_entries(
-    spark: SparkSession, root_p: Path, snap: dict, entries: list[dict]
+    spark: SparkSession,
+    root_p: Path,
+    snap: dict,
+    entries: list[dict] | None = None,
 ) -> DataFrame:
-    """Read a subset of a snapshot's file entries WITH the snapshot's
-    recorded (evolved) schema, so files written before a column was
-    added null-fill it — every table read goes through here. Reading a
-    raw file subset instead would resolve whatever schema the sampled
-    footers happen to carry, silently dropping (or crashing on)
-    evolved columns inside reads and merge/delete/CDC rewrites. Empty
-    subset -> an empty frame with the full schema."""
+    """Read a subset of a snapshot's file entries — the whole snapshot
+    when `entries` is None — WITH the snapshot's recorded (evolved)
+    schema, so files written before a column was added null-fill it —
+    every table read goes through here. Reading a raw file subset
+    instead would resolve whatever schema the sampled footers happen to
+    carry, silently dropping (or crashing on) evolved columns inside
+    reads and merge/delete/CDC rewrites. Empty subset -> an empty frame
+    with the full schema.
+
+    A whole-snapshot read passes Spark the one listing directory when
+    the snapshot has one; ``input_file_name()`` then names listing
+    entries, which ``_touched`` maps back to manifest entries."""
     schema = None
     if snap.get("schema"):
         from pyspark.sql.types import StructType
 
         schema = StructType.fromJson(snap["schema"])
+    reader = spark.read.schema(schema) if schema is not None else spark.read
+    if entries is None:
+        if snap.get("listing") and snap["files"]:
+            return reader.parquet(str(root_p / snap["listing"]))
+        entries = snap["files"]
     if not entries:
-        anchor = str(root_p / snap["files"][0]["path"])
-        r = (
-            spark.read.schema(schema).parquet(anchor)
-            if schema is not None
-            else spark.read.parquet(anchor)
-        )
-        return r.limit(0)
-    paths = [str(root_p / f["path"]) for f in entries]
-    if schema is not None:
-        return spark.read.schema(schema).parquet(*paths)
-    return spark.read.parquet(*paths)
+        return reader.parquet(str(root_p / snap["files"][0]["path"])).limit(0)
+    return reader.parquet(*[str(root_p / f["path"]) for f in entries])
 
 
 def merge_table(
@@ -466,7 +505,6 @@ def merge_table(
     read)."""
     snap = load_snapshot(root)
     root_p = Path(root)
-    key_is_int = snap.get("key_kind") == "int"
     bits = snap["bucket_bits"]
     h3_col = snap["h3_col"]
     if not snap["files"]:
@@ -482,18 +520,19 @@ def merge_table(
         )
     if merge_key not in data_cols:
         raise ValueError(f"merge_key {merge_key!r} is not a table column")
-    updates = updates.select(*data_cols)
-    if updates.filter(
-        F.col(merge_key).isNull() | F.col(h3_col).isNull()
-    ).limit(1).count():
+    # pre-flight: one aggregate over the checkpoint gives its row count
+    # and null-key count, both before anything is written
+    up = updates.select(*data_cols).localCheckpoint(eager=True)
+    n_rows, n_null = up.agg(
+        F.count(F.lit(1)),
+        F.count(F.when(F.col(merge_key).isNull() | F.col(h3_col).isNull(), 1)),
+    ).first()
+    if n_null:
         raise ValueError(
             f"updates contain null {merge_key!r} or {h3_col!r} rows — "
             "they would be unreachable after the write"
         )
-    up = _with_key_cols(updates, h3_col, key_is_int, bits).localCheckpoint(
-        eager=True
-    )
-    if up.isEmpty():
+    if not n_rows:
         return snap
     # find-touched-files: one column-pruned scan of the merge-key
     # column, semi-joined with the update keys, collecting only the
@@ -503,7 +542,7 @@ def merge_table(
     # cell: the old row's file is still rewritten without it.
     up_keys = up.select(merge_key).distinct()
     hit = (
-        _read_entries(spark, root_p, snap, snap["files"])
+        _read_entries(spark, root_p, snap)
         # capture the file name AT SCAN TIME: input_file_name() is only
         # defined in the scan's stage and reads empty after an exchange
         .select(merge_key, F.input_file_name().alias("_f"))
@@ -513,7 +552,7 @@ def merge_table(
         .collect()
     )
     affected, carried = _touched(root_p, snap, (r["_f"] for r in hit))
-    pieces = up.select(*data_cols)
+    pieces = up
     if affected:
         old = _read_entries(spark, root_p, snap, affected)
         keep_old = old.join(
@@ -532,12 +571,21 @@ def _touched(
     """Split `snap`'s file entries into those named by the
     ``input_file_name()`` URIs and the rest. Spark percent-encodes the
     URIs; they are decoded before matching, or a table root with spaces
-    or escaped characters would never match its manifest paths."""
+    or escaped characters would never match its manifest paths. A URI
+    inside the snapshot's listing names ``files[i]`` by its index ``i``;
+    the entry itself is never resolved, because a copied table (e.g.
+    ``shutil.copytree``) holds plain files where the links were."""
+    listing = (
+        (root_p / snap["listing"]).resolve() if snap.get("listing") else None
+    )
     hit = set()
     for uri in uris:
         parsed = urlparse(uri)
-        p = unquote(parsed.path) if parsed.scheme else uri
-        hit.add(str(Path(p).resolve().relative_to(root_p.resolve())))
+        p = Path(unquote(parsed.path) if parsed.scheme else uri)
+        if p.parent.resolve() == listing:
+            hit.add(snap["files"][int(p.name)]["path"])
+        else:
+            hit.add(str(p.resolve().relative_to(root_p.resolve())))
     return (
         [f for f in snap["files"] if f["path"] in hit],
         [f for f in snap["files"] if f["path"] not in hit],
@@ -599,7 +647,7 @@ def delete_table(
         raise ValueError("delete_table requires a non-empty table")
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     hit = (
-        _read_entries(spark, root_p, snap, snap["files"])
+        _read_entries(spark, root_p, snap)
         .filter(pred)
         .groupBy(F.input_file_name().alias("_f"))
         .count()
@@ -794,7 +842,7 @@ def compact_table(
             math.ceil(math.log2(max(1.0, total_bytes / target_file_bytes))),
         ),
     )
-    rows = _read_entries(spark, root_p, snap, snap["files"]).drop(
+    rows = _read_entries(spark, root_p, snap).drop(
         "_h3_int", "_h3_bucket"
     )
     return _rewrite(
@@ -807,9 +855,15 @@ def expire_snapshots(root: str, keep_last: int = 1) -> dict:
     """Table maintenance: drop all but the newest `keep_last` snapshots
     and delete every data file no kept snapshot references (Iceberg
     expire_snapshots + orphan-file cleanup), including generation
-    directories no snapshot ever committed. Returns counts. Run it only
-    while no writer is active: it removes a generation a writer has
-    written but not yet committed."""
+    directories no snapshot ever committed; then every
+    ``metadata/files-*`` listing no kept snapshot names (expired
+    snapshots', a losing or killed writer's) and every stale
+    ``metadata/.v<N>.*.tmp`` temp snapshot. Kept snapshots' listings
+    are never touched. Expired snapshots are removed before the files
+    they name, so an interrupted expiry never leaves a snapshot
+    pointing at missing data. Returns counts. Run it only while no
+    writer is active: it removes the generation, listing and temp file
+    of a writer that has not committed yet."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     root_p = Path(root)
@@ -821,9 +875,22 @@ def expire_snapshots(root: str, keep_last: int = 1) -> dict:
         raise FileNotFoundError(f"no snapshots under {meta}")
     keep = set(versions[-keep_last:])
     referenced: set = set()
+    listings: set = set()
     for v in keep:
         snap = json.loads((meta / f"v{v}.json").read_text())
         referenced.update(f["path"] for f in snap["files"])
+        if "listing" in snap:
+            listings.add(Path(snap["listing"]).name)
+    removed_snaps = 0
+    for v in versions:
+        if v not in keep:
+            (meta / f"v{v}.json").unlink()
+            removed_snaps += 1
+    for d in meta.glob("files-*"):
+        if d.name not in listings:
+            shutil.rmtree(d)
+    for tmp in meta.glob(".v*.tmp"):
+        tmp.unlink()
     removed_files = 0
     # whole generation directories no kept snapshot touches go wholesale
     # (including Spark's _SUCCESS/.crc sidecars); referenced generations
@@ -837,11 +904,6 @@ def expire_snapshots(root: str, keep_last: int = 1) -> dict:
         if str(p.relative_to(root_p)) not in referenced:
             p.unlink()
             removed_files += 1
-    removed_snaps = 0
-    for v in versions:
-        if v not in keep:
-            (meta / f"v{v}.json").unlink()
-            removed_snaps += 1
     return {
         "kept_snapshots": sorted(keep),
         "removed_snapshots": removed_snaps,

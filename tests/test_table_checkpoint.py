@@ -878,6 +878,8 @@ if step == "data_written":
     manifest._write_generation = then_die(manifest._write_generation)
 elif step == "data_fsynced":  # the first fsync call covers the generation
     manifest._fsync = then_die(manifest._fsync)
+elif step == "listing_written":  # listing directory written + fsynced
+    manifest._write_listing = then_die(manifest._write_listing)
 elif step == "snapshot_written":  # temp snapshot written + fsynced
     os.link = lambda *args: die()
 elif step == "linked":
@@ -1046,12 +1048,19 @@ class TestCommitProtocol:
         referenced = {Path(f["path"]).parts[0] for f in snap["files"]}
         on_disk = {p.name for p in Path(root).iterdir() if p.name != "metadata"}
         assert on_disk == referenced
+        # no loser leaves a listing either: one per committed version
+        listings = {p.name for p in (Path(root) / "metadata").glob("files-*")}
+        assert listings == {
+            Path(manifest.load_snapshot(root, v)["listing"]).name
+            for v in range(1, snap["version"] + 1)
+        }
 
     @pytest.mark.parametrize(
         "step, committed",
         [
             ("data_written", False),
             ("data_fsynced", False),
+            ("listing_written", False),
             ("snapshot_written", False),
             ("linked", True),
         ],
@@ -1086,3 +1095,164 @@ class TestCommitProtocol:
         assert len(self._ids(spark, root)) == len(
             new_ids if committed else old_ids
         ) + 2
+
+
+class TestSnapshotListing:
+    """Whole-snapshot reads go through the snapshot's listing directory
+    (``metadata/files-<gen>/``, one symlink per manifest entry)."""
+
+    COLS = ["doc_id", "lat", "lng", "h3_07"]
+
+    def _wide(self, spark, n=200):
+        """`n` points spread over the sphere: one file per occupied
+        bucket, far more files than Spark's parallel-listing threshold
+        (32 paths)."""
+        import numpy as np
+
+        from sparkh3.kernel import geo
+        from sparkh3.kernel import index as ix
+
+        rng = np.random.default_rng(11)
+        lat = np.degrees(np.arcsin(rng.uniform(-1, 1, n)))
+        lng = rng.uniform(-180, 180, n)
+        cells = ix.int_to_str(geo.latlng_to_cell(lat, lng, 7))
+        return spark.createDataFrame(
+            [(f"p{i}", float(a), float(b), str(c))
+             for i, (a, b, c) in enumerate(zip(lat, lng, cells))],
+            "doc_id string, lat double, lng double, h3_07 string",
+        )
+
+    def _rows(self, spark, root):
+        df = manifest.read_table(spark, str(root)).select(*self.COLS)
+        return sorted(tuple(r) for r in df.collect())
+
+    def _moved(self, h3_docs, n=10):
+        """`n` existing rows with a changed `lat` (same cell)."""
+        return (
+            h3_docs.orderBy("doc_id").limit(n)
+            .withColumn("lat", F.lit(0.5)).select(*self.COLS)
+        )
+
+    def _strip_listing(self, root):
+        """Make the live snapshot look like one written before listings
+        existed: no ``"listing"`` key and no listing directory."""
+        import shutil
+
+        v = manifest.current_version(str(root))
+        path = Path(root) / "metadata" / f"v{v}.json"
+        snap = json.loads(path.read_text())
+        shutil.rmtree(Path(root) / snap.pop("listing"))
+        path.write_text(json.dumps(snap))
+
+    def test_whole_read_and_merge_run_no_listing_job(self, spark, tmp_path):
+        from urllib.parse import urlparse
+
+        root = str(tmp_path / "wide")
+        snap = manifest.write_table(self._wide(spark), root, "h3_07")
+        n_files = len(snap["files"])
+        assert n_files > 32
+        sc = spark.sparkContext
+        st = sc.statusTracker()
+
+        def job_tasks(group):
+            return [
+                sum(
+                    st.getStageInfo(s).numTasks
+                    for s in st.getJobInfo(j).stageIds
+                    if st.getStageInfo(s) is not None
+                )
+                for j in st.getJobIdsForGroup(group)
+            ]
+
+        try:
+            sc.setJobGroup("listing-read", "build a whole-table read")
+            df = manifest.read_table(spark, root)
+            assert st.getJobIdsForGroup("listing-read") == []
+            # Spark was handed the one listing directory
+            listing = Path(root, snap["listing"]).resolve()
+            files = df.inputFiles()
+            assert len(files) == n_files
+            assert {Path(urlparse(f).path).parent for f in files} == {listing}
+            assert df.count() == 200
+            sc.setJobGroup("listing-merge", "merge into a wide table")
+            upd = self._wide(spark).filter(F.col("doc_id").isin("p1", "p7"))
+            manifest.merge_table(
+                spark, root, upd.withColumn("lat", F.lit(0.5)), "doc_id"
+            )
+            tasks = job_tasks("listing-merge")
+            assert tasks and max(tasks) < n_files, (tasks, n_files)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        df = manifest.read_table(spark, root)
+        assert df.count() == 200
+        assert df.filter(F.col("lat") == 0.5).count() == 2
+
+    def test_copied_table_merges_and_deletes_like_original(
+        self, spark, h3_docs, tmp_path
+    ):
+        """``shutil.copytree`` turns listing links into plain files; the
+        touched files are still found by their index in the listing."""
+        import shutil
+
+        orig = tmp_path / "orig"
+        snap = manifest.write_table(h3_docs, str(orig), "h3_07")
+        copy = tmp_path / "copy"
+        shutil.copytree(orig, copy)
+        assert not any(p.is_symlink() for p in copy.rglob("*"))
+        for root in (orig, copy):
+            manifest.merge_table(spark, str(root), self._moved(h3_docs), "doc_id")
+        merged = self._rows(spark, orig)
+        assert len(merged) == snap["total_rows"]
+        assert sum(r[1] == 0.5 for r in merged) == 10
+        assert self._rows(spark, copy) == merged
+
+        copy2 = tmp_path / "copy2"
+        shutil.copytree(orig, copy2)
+        for root in (orig, copy2):
+            manifest.delete_table(spark, str(root), "lat = 0.5")
+        deleted = self._rows(spark, orig)
+        assert len(deleted) == snap["total_rows"] - 10
+        assert self._rows(spark, copy2) == deleted
+
+    def test_snapshot_without_listing_still_works(self, spark, h3_docs, tmp_path):
+        root = tmp_path / "legacy"
+        snap = manifest.write_table(h3_docs, str(root), "h3_07")
+        self._strip_listing(root)
+        assert len(self._rows(spark, root)) == snap["total_rows"]
+        manifest.merge_table(spark, str(root), self._moved(h3_docs), "doc_id")
+        merged = self._rows(spark, root)
+        assert len(merged) == snap["total_rows"]
+        assert sum(r[1] == 0.5 for r in merged) == 10
+        self._strip_listing(root)
+        manifest.delete_table(spark, str(root), "lat = 0.5")
+        assert len(self._rows(spark, root)) == snap["total_rows"] - 10
+        manifest.expire_snapshots(str(root), keep_last=1)
+        assert len(self._rows(spark, root)) == snap["total_rows"] - 10
+
+    def test_expire_reclaims_listings_and_temp_files(
+        self, spark, h3_docs, tmp_path
+    ):
+        import os
+
+        root = tmp_path / "exp"
+        manifest.write_table(h3_docs, str(root), "h3_07")
+        manifest.write_table(h3_docs.limit(5), str(root), "h3_07", mode="append")
+        meta = root / "metadata"
+        listings = {
+            v: Path(manifest.load_snapshot(str(root), v)["listing"]).name
+            for v in (1, 2)
+        }
+        # what a killed or losing writer leaves behind
+        (meta / ".v3.gen-dead.tmp").write_text("{}")
+        (meta / "files-gen-dead").mkdir()
+        os.symlink("../../gen-dead/x.parquet", meta / "files-gen-dead" / "000000")
+
+        manifest.expire_snapshots(str(root), keep_last=2)
+        assert sorted(p.name for p in meta.iterdir()) == sorted(
+            ["v1.json", "v2.json", *listings.values()]
+        )
+        manifest.expire_snapshots(str(root), keep_last=1)
+        assert sorted(p.name for p in meta.iterdir()) == sorted(
+            ["v2.json", listings[2]]
+        )
+        assert len(self._rows(spark, root)) == h3_docs.count() + 5
